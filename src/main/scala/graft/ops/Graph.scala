@@ -143,7 +143,8 @@ object Graph {
     * 3 at sf0.01 — measured), so the cap NEVER binds on test data and
     * every cooc-fed oracle hash is unchanged; `graph_cooc_cap_audit`
     * cross-checks max-cell-size < cap in BOTH engines every run, and
-    * CoocSkewProbe measures the hot-cell bound live (SCALING.md r15). */
+    * the hot-cell bound was measured on a synthetic 10⁵-user cell
+    * (SCALING.md r15) and GraphSpec pins it on a hot cell. */
   private[graft] val CoocCellCap = 64
 
   /** Distinct undirected user co-occurrence edges (a < b) from shared
@@ -152,7 +153,7 @@ object Graph {
     * [[CoocCellCap]].
     *
     * Round-16 revision (verdict item 4): the r15 rank-always shape was
-    * measured NOT free — CoocCapAB's same-JVM paired A/B over the sf0.1
+    * measured NOT free — a same-JVM paired A/B over the sf0.1
     * kcore path read capped 1.623 s vs uncapped 1.307 s medians (n=7,
     * sentinels quiet ~0.15 s): the per-side window sort above the reused
     * exchange costs ~24%, which is exactly the r15 graph-family drift.
@@ -163,7 +164,7 @@ object Graph {
     * cell ONCE (collect_set → sort_array → slice) and explodes pairs from
     * the bounded array — two shuffles vs the uncapped builder's three, no
     * window, no self-join, measured STRICTLY CHEAPER than uncapped
-    * (CoocCapAB; SCALING.md r16). Truncation semantics are unchanged
+    * (SCALING.md r16). Truncation semantics are unchanged
     * (capPerCell smallest user ids, deterministic), emission stays
     * hard-bounded at C(cap,2) per cell, and every cooc-fed oracle hash is
     * unchanged. */
@@ -172,7 +173,7 @@ object Graph {
     coocEdgesCore(tbl(s, d, "events"), capPerCell)
 
   /** The builder core over any (user_id, event_type, ts) frame —
-    * CoocSkewProbe feeds it a synthetic 10⁵-user hot cell directly. */
+    * GraphSpec feeds it a synthetic hot cell directly. */
   private[graft] def coocEdgesCore(events: DataFrame,
       capPerCell: Int = CoocCellCap): DataFrame = {
     val base = events
@@ -183,8 +184,8 @@ object Graph {
         date_trunc("minute", col("ts")).as("w"))
     if (capPerCell == Int.MaxValue) {
       // the uncapped r14 builder (distinct → self-join on the cell key →
-      // distinct): kept verbatim as the honest baseline arm for
-      // CoocCapAB's paired A/B
+      // distinct): kept verbatim as the baseline GraphSpec checks the
+      // capped shape against (the baseline arm of the SCALING.md r16 A/B)
       val b = base.distinct()
       val b2 = b.select(col("u").as("v"), col("event_type"), col("w"))
       b.join(b2, Seq("event_type", "w"))
@@ -203,8 +204,8 @@ object Graph {
       // user bound, VERDICT r16 item 3; map-side partials are capped too,
       // so the pre-shuffle combine ships ≤cap ids per cell per mapper).
       // Two shuffles total (cells, final cross-cell distinct), no window
-      // sort, no self-join; capped stays cheaper-than-uncapped (CoocCapAB
-      // r17 arms) and every cooc-fed oracle hash is unchanged. Emission
+      // sort, no self-join; capped stays cheaper-than-uncapped (r17 paired
+      // A/B, SCALING.md) and every cooc-fed oracle hash is unchanged. Emission
       // stays hard-bounded at C(cap,2) per cell.
       graft.ext.CatalystExt.register(base.sparkSession)
       base.groupBy(col("event_type"), col("w"))

@@ -1014,14 +1014,14 @@ object Relational {
     * Note Spark's governance guardrail `spark.sql.cteRecursionRowLimit`
     * (default 1e6 rows over the WHOLE recursion): the fixture expands to
     * 210 k rows and fits, but production sizing must raise it —
-    * RecursiveCteProbe runs 10 M keys → 2.23e8 rows under a raised limit
-    * with the closed form verified exactly (SCALING.md r15). */
+    * a 10 M-key run expanded to 2.23e8 rows under a raised limit with the
+    * closed form verified exactly (SCALING.md r15). */
   private val subRecursiveCte: Q = (s, d) => {
     tbl(s, d, "customer").createOrReplaceTempView("sub_rec_cust")
     // raise Spark's recursion-row guardrail (default 1e6 TOTAL rows):
     // this walk expands to ~n·(log2 n − 1) rows, which crosses 1e6 around
     // 65k keys — a regenerated/larger fixture must not abort the op
-    // (review r15; RecursiveCteProbe ran 2.2e8 rows under the same knob).
+    // (review r15; the SCALING.md r15 2.2e8-row run used the same knob).
     // Pin/restore like Streaming.ProviderKey: the raised limit must not
     // outlive this query and weaken the guardrail session-wide (ADVICE r15);
     // recursive-CTE row counting happens at execution, so the limit is

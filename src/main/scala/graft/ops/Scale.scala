@@ -58,8 +58,8 @@ object Scale {
 
   /** q9-class 5-way star join for the CBO demonstration, written in a
     * DELIBERATELY bad syntactic order (orders ⋈ lineitem first, the
-    * filtered part table last). Shared by `join_cbo_star` and
-    * `graft.tools.CboProbe` / CboSpec. */
+    * filtered part table last). Shared by `join_cbo_star` and CboSpec;
+    * the captured cbo off/on plans are recorded in PLANS.md. */
   private[graft] val cboStarQuery: String =
     """SELECT n_name,
               sum(CAST(floor(l_extendedprice*100 + 0.5) AS BIGINT)) AS rev_cents,

@@ -83,8 +83,9 @@ object Streaming {
   private[graft] val RocksProvider =
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
-  /** Round-17 streaming fixed-cost trims (optimization guide §1 measured,
-    * graft.tools.StreamConfAB: arms alternated per rep, all row-identical):
+  /** Round-17 streaming fixed-cost trims (optimization guide §1 measured;
+    * paired conf arms alternated per rep, all row-identical — verdict table
+    * in OPTIMIZATION_r17.md, "Streaming family"):
     *
     *  - State-store partition count: every stateful operator instantiates
     *    one state store PER shuffle partition PER micro-batch — under the
@@ -155,30 +156,19 @@ object Streaming {
   }
 
   /** Run a streaming DataFrame to completion into a memory sink, return the
-    * finished table. State store: RocksDB, adopted round 15 after the
-    * `graft.tools.RocksAB` A/B proved all 14 stateful ids hash-identical
-    * under both providers at parity-or-better walls — at 100 TB state the
-    * off-heap/SSD-spilling store bounds per-executor state by disk instead
-    * of JVM heap, which is the provider a production stateful job runs
-    * anyway (transformWithState already REQUIRED it). The pin respects a
-    * caller-set provider (conf already present is left alone), which is
-    * how RocksAB still forces the HDFS baseline arm. */
-  private val lastSinkTable = new java.util.concurrent.atomic.AtomicReference[String]()
-  private def runToTable(s: SparkSession, df: DataFrame, mode: String,
-      maxFilesPerTrigger: Option[Int] = None): DataFrame = {
+    * finished table. State store: RocksDB, adopted round 15 after a paired
+    * provider A/B found all 14 stateful ids hash-identical under both
+    * providers at parity-or-better walls (verdict in SCALING.md,
+    * "Streaming") — at 100 TB state the off-heap/SSD-spilling store bounds
+    * per-executor state by disk instead of JVM heap, which is the provider
+    * a production stateful job runs anyway (transformWithState already
+    * REQUIRED it). The pin respects a caller-set provider (conf already
+    * present is left alone), so an explicit HDFS-backed store still wins.
+    * Sink tables stay registered: dropping the previous one was A/B'd at
+    * parity over the stream family (OPTIMIZATION_r18.md, round close). */
+  private def runToTable(s: SparkSession, df: DataFrame,
+      mode: String): DataFrame = {
     val name = s"graft_stream_${ctr.incrementAndGet()}"
-    // EXPERIMENT (r18, conf-gated, default OFF): drop the PREVIOUS
-    // invocation's memory-sink table before starting a new one — a suite
-    // run registers hundreds of sink tables (one per rep per stream id),
-    // and the in-suite stream-stream join elevation (isolated 3.5 s vs
-    // in-family 8-12 s) needed an accumulation-vs-stall bisect. Off by
-    // default because a caller may still hold the previous lazy frame.
-    if (s.conf.getOption("graft.stream.dropPrevSink")
-        .orElse(sys.env.get("GRAFT_DROP_PREV_SINK")).exists(
-          v => v == "true" || v == "1")) {
-      val prev = lastSinkTable.getAndSet(name)
-      if (prev != null) s.sql(s"DROP TABLE IF EXISTS `$prev`")
-    }
     val ckpt = ckptDir(name)
     dropCkpt(ckpt) // ADVICE r5: a stale dir from a crashed run would replay
     // the input as already-processed (empty complete-mode result) or abort

@@ -1,9 +1,13 @@
 package graft.ops
 
 import graft.util.Canon._
+import java.util.concurrent.{Executors, TimeUnit}
+import java.util.concurrent.atomic.AtomicLong
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration.Duration
 
 /** LLM-data-pipeline operators — SURVEY.md §2.9 dedup / similarity / text
   * families + multimodal columns (mandated by BASELINE.json:6).
@@ -46,6 +50,52 @@ object TextDedup {
     "list_sum(list_transform(list_zip(%s, %s), x -> CAST(x[1] AS DOUBLE)*CAST(x[2] AS DOUBLE)))"
   private[ops] def cosineSql(a: String, b: String): String =
     s"${cosSql.format(a, b)} / (sqrt(${cosSql.format(a, a)}) * sqrt(${cosSql.format(b, b)}))"
+
+  // ------------------------------------------------------------------ overlap
+  private val overlapIds = new AtomicLong()
+
+  /** Driver-side overlap of independent eager branches (guide §2.6): `body`
+    * gets an ExecutionContext over a `threads`-sized pool, starts its
+    * members as Futures on it and collects them with [[awaitAll]], which
+    * fails as soon as any member fails. Every Spark job a member submits
+    * carries one job tag; when `body` fails, the pool is stopped with
+    * `shutdownNow()`, its threads are joined (bounded), and then every job
+    * still carrying the tag — a sibling's — is cancelled before the failure
+    * is rethrown. Cancelling after the join also catches a job a member
+    * submitted while being stopped. */
+  private[graft] def overlapped[T](s: SparkSession, threads: Int)(
+      body: ExecutionContext => T): T = {
+    val sc = s.sparkContext
+    val tag = s"graft-overlap-${overlapIds.incrementAndGet()}"
+    val pool = Executors.newFixedThreadPool(threads, (r: Runnable) => {
+      val t = new Thread(r, tag)
+      t.setDaemon(true)
+      t
+    })
+    val ec = new ExecutionContext {
+      def execute(r: Runnable): Unit = pool.execute { () =>
+        sc.addJobTag(tag)
+        try r.run() finally sc.removeJobTag(tag)
+      }
+      // after a failure the stopped pool rejects late callbacks; those are
+      // expected, anything else is reported
+      def reportFailure(t: Throwable): Unit =
+        if (!pool.isShutdown) t.printStackTrace()
+    }
+    var failed = true
+    try { val out = body(ec); failed = false; out }
+    finally {
+      pool.shutdownNow()
+      pool.awaitTermination(30, TimeUnit.SECONDS)
+      if (failed) sc.cancelJobsWithTag(tag)
+    }
+  }
+
+  /** Await every member; fails as soon as one fails (`Future.sequence` is
+    * fail-fast), so [[overlapped]] can cancel the siblings still running. */
+  private[graft] def awaitAll[A](fs: Future[A]*)(
+      implicit ec: ExecutionContext): Seq[A] =
+    Await.result(Future.sequence(fs), Duration.Inf)
 
   // -------------------------------------------------------------------- dedup
   /** Exact dedup on normalized text → sha256 groups, deterministic keeper. */
@@ -260,17 +310,13 @@ object TextDedup {
     // (jaccardTruthDups runs eager interior actions, and QProf showed the
     // whole audit as a chain of SINGLE-task stages on the one-row-group
     // fixture — 31 cores idle). r17 measured-and-declined repartition
-    // fan-out of those stages (paired FanAB LOST: per-task fixed costs
-    // dominate KB-scale stages on this box); overlapping the independent
-    // branches adds NO exchange and no tasks — the three 1-row aggregates
-    // materialize concurrently and the assembly crossJoin is unchanged
-    // (values order-insensitive, schema identical, oracle hash unchanged).
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(3)
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.fromExecutorService(pool)
-    try {
+    // fan-out of those stages (its paired A/B LOST, OPTIMIZATION_r17.md:
+    // per-task fixed costs dominate KB-scale stages); overlapping the
+    // independent branches adds NO exchange and no tasks — the three 1-row
+    // aggregates materialize concurrently and the assembly crossJoin is
+    // unchanged (values order-insensitive, schema identical, oracle hash
+    // unchanged).
+    overlapped(s, 3) { implicit ec =>
       def sets = tbl(s, d, "documents")
         .select(col("doc_id"), sort_array(array_distinct(toks(normText))).as("st"))
       val baseF = Future {
@@ -291,15 +337,13 @@ object TextDedup {
               .as("prec"),
             countDistinct(col("db")).as("n_found"))
           .localCheckpoint(true) }
-      val base = Await.result(baseF, Duration.Inf)
-      val nt = Await.result(ntF, Duration.Inf)
-      val chk = Await.result(chkF, Duration.Inf)
+      val Seq(base, nt, chk) = awaitAll(baseF, ntF, chkF)
       base.crossJoin(broadcast(nt)).crossJoin(broadcast(chk))
         .select(col("n_docs").cast("long").as("n_docs"),
           col("n_truth").cast("long").as("n_truth_dups"),
           (col("prec") === 1L).as("precision_ok"),
           (col("n_found") * 100L >= col("n_truth") * 90L).as("recall_ok"))
-    } finally pool.shutdown()
+    }
   }
 
   /** ORACLE-GATED audit for dedup_simhash against the SAME exact-Jaccard
@@ -317,18 +361,13 @@ object TextDedup {
     // r18 (guide §2.6, same rationale as dedupMinhashAudit): the truth and
     // found sides are independent eager checkpoints that used to serialize
     // their single-task stage chains; overlap them on a 2-thread pool.
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.fromExecutorService(pool)
-    val (truth, found) = try {
-      val truthF = Future { jaccardTruthDups(s, d).localCheckpoint(true) }
-      val foundF = Future {
-        dedupSimhash(s, d).where(col("is_dup")).select(col("doc_id"))
-          .localCheckpoint(true) }
-      (Await.result(truthF, Duration.Inf), Await.result(foundF, Duration.Inf))
-    } finally pool.shutdown()
+    val Seq(truth, found) = overlapped(s, 2) { implicit ec =>
+      awaitAll(
+        Future { jaccardTruthDups(s, d).localCheckpoint(true) },
+        Future {
+          dedupSimhash(s, d).where(col("is_dup")).select(col("doc_id"))
+            .localCheckpoint(true) })
+    }
     val base = tbl(s, d, "documents").agg(count(lit(1)).as("n_docs"))
     val nt = truth.agg(count(lit(1)).as("n_truth"))
     val nf = found.agg(count(lit(1)).as("n_found"))
@@ -2122,7 +2161,7 @@ object TextDedup {
     * top-Cand) — lifting codebook resolution (256 codewords needs the
     * larger training sample) and Cand recovered flat-PQ recall to 100% at
     * every SF, and the residual IVFADC gap is the coarse stage alone
-    * (ivfpq == ivf at every probe count measured, r14 RecallProbe). */
+    * (ivfpq == ivf at every probe count measured, r14, SCALING.md). */
   private val simAnnRecallAudit: Q = (s, d) => {
     // r18 (VERDICT r17 item 2, guide §2.6 "overlap independent jobs"): the
     // six approximate pipelines are INDEPENDENT of each other, but each
@@ -2137,12 +2176,7 @@ object TextDedup {
     // the sequential form (every member is deterministic, and a count is
     // order-insensitive).
     graft.ext.CatalystExt.register(s) // once, before threads share it
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.fromExecutorService(pool)
-    try {
+    overlapped(s, 4) { implicit ec =>
       val exF = Future {
         simCosineTopk(s, d).select(col("qid"), col("vec_id"))
           .localCheckpoint(true)
@@ -2152,13 +2186,13 @@ object TextDedup {
       }.zip(exF).map { case (ap, ex) =>       // then the hit count vs exact
         ap.join(ex, Seq("qid", "vec_id")).count()
       }
-      val hfs = Seq("lsh" -> simLshAnn, "ivf" -> simIvfAnn,
+      val members = Seq("lsh" -> simLshAnn, "ivf" -> simIvfAnn,
         "ivfs" -> simIvfScaled,
         "mllib" -> simMllibLsh, "pq" -> simPqAnn, "ivfpq" -> simIvfPqAnn)
-        .map { case (n, q) => n -> hitsF(q) }
-      val ex = Await.result(exF, Duration.Inf)
-      val hits = hfs.map { case (n, f) =>
-        n -> Await.result(f, Duration.Inf) }.toMap
+      // every member zips exF, so awaiting the members awaits exF too
+      val hits = members.map(_._1)
+        .zip(awaitAll(members.map { case (_, q) => hitsF(q) }: _*)).toMap
+      val Seq(ex) = awaitAll(exF)
       def ok(name: String, pct: Int): Column =
         (lit(hits(name)) * 100L >= col("n_exact") * pct.toLong)
           .as(s"${name}_recall_ok")
@@ -2168,7 +2202,7 @@ object TextDedup {
           col("sum_exact_ids").cast("long").as("sum_exact_ids"),
           ok("lsh", 85), ok("ivf", 80), ok("ivfs", 75), ok("mllib", 85),
           ok("pq", 85), ok("ivfpq", 80))
-    } finally pool.shutdown()
+    }
   }
 
   // ------------------------------------------------------------ text analysis

@@ -178,7 +178,7 @@ class AvroSourceSpec extends AnyFunSuite {
     AvroUtil.write(df.repartition(2), d2)
     val schema = spark.read.format("graft-avro").load(d2).schema
     def mkStream() = new graft.sources.avro.AvroMicroBatchStream(
-      Seq(d2), None, schema, Nil, Array.empty, Array.empty, 1L << 20,
+      Seq(d2), None, schema, Nil, Array.empty, 1L << 20,
       None, ckpt)
     val stream = mkStream()
     val start = stream.initialOffset()
@@ -225,7 +225,7 @@ class AvroSourceSpec extends AnyFunSuite {
     AvroUtil.write(df.repartition(4), d3) // 4-file backlog before the query
     val schema = spark.read.format("graft-avro").load(d3).schema
     val stream = new graft.sources.avro.AvroMicroBatchStream(
-      Seq(d3), None, schema, Nil, Array.empty, Array.empty, 1L << 20,
+      Seq(d3), None, schema, Nil, Array.empty, 1L << 20,
       Some(1), ckpt)
     assert(stream.getDefaultReadLimit.isInstanceOf[
       org.apache.spark.sql.connector.read.streaming.ReadMaxFiles])
@@ -301,12 +301,14 @@ class AvroSourceSpec extends AnyFunSuite {
     val table = provider.getTable(schema, Array.empty, props)
     val sb = table.asInstanceOf[SupportsRead].newScanBuilder(opts)
     val residual = sb.asInstanceOf[SupportsPushDownFilters].pushFilters(
-      Array(org.apache.spark.sql.sources.EqualTo("et_part", "click")))
+      Array(org.apache.spark.sql.sources.EqualTo("et_part", "click"),
+        org.apache.spark.sql.sources.GreaterThan("user_id", 0L)))
     // everything residual (Spark re-applies — pushdown can't lose rows) ...
-    assert(residual.length == 1)
-    // ... and the partition filter is REPORTED pushed
-    assert(sb.asInstanceOf[SupportsPushDownFilters].pushedFilters()
-      .contains(org.apache.spark.sql.sources.EqualTo("et_part", "click")))
+    assert(residual.length == 2)
+    // ... and only the partition filter is REPORTED pushed: data filters
+    // are left to the residual Filter, never evaluated in the reader
+    assert(sb.asInstanceOf[SupportsPushDownFilters].pushedFilters().toSeq ==
+      Seq(org.apache.spark.sql.sources.EqualTo("et_part", "click")))
     val parts = sb.build().toBatch.planInputPartitions()
     assert(parts.nonEmpty)
     parts.foreach { p =>
@@ -373,7 +375,7 @@ class AvroSourceSpec extends AnyFunSuite {
     System.setProperty("graft.avro.compactInterval", "2")
     try {
       def mkStream() = new graft.sources.avro.AvroMicroBatchStream(
-        Seq(d), None, schema, Nil, Array.empty, Array.empty, 1L << 20,
+        Seq(d), None, schema, Nil, Array.empty, 1L << 20,
         None, ckpt)
       val stream = mkStream()
       var cur = stream.initialOffset()

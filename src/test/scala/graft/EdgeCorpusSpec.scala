@@ -47,6 +47,45 @@ class EdgeCorpusSpec extends AnyFunSuite {
     }
   }
 
+  test("null-text and empty-text docs: gopher keeps a row for each, " +
+      "release_e2e counts them in and drops both at the gopher stage") {
+    // doc 1000 has a null text, doc 1001 an empty one; both ride on the
+    // first 40 fixture docs
+    def withEdges(docs: org.apache.spark.sql.DataFrame) = {
+      val edges = spark.createDataFrame(spark.sparkContext.parallelize(Seq(
+        org.apache.spark.sql.Row(1000L, null, "en", "src0", 0L),
+        org.apache.spark.sql.Row(1001L, "", "en", "src0", 0L))), docs.schema)
+      docs.where(col("doc_id") < 40).unionByName(edges)
+    }
+    val d = corpusDir("null_text")(withEdges)
+    val plain = corpusDir("null_text_base")(_.where(col("doc_id") < 40))
+    val gopher = SparkEntry.queries("pipeline_gopher_rules")(spark, d)
+      .collect()
+    assert(gopher.length == 42)
+    val byId = gopher.map(r => r.getLong(0) -> r).toMap
+    // null text: every measure and verdict, keep included, is null
+    assert((1 until byId(1000L).length).forall(byId(1000L).isNullAt))
+    // "" splits to one empty token: 1 word of length 0, no stop words,
+    // every rule fails
+    assert(byId(1001L).toSeq == Seq(1001L, 1L, 0.0, 1.0, 0L,
+      false, false, false, false, false))
+    // the 40 real docs are scored exactly as without the edge docs
+    val base = SparkEntry.queries("pipeline_gopher_rules")(spark, plain)
+      .collect().map(_.toString).toSeq
+    assert(gopher.filter(_.getLong(0) < 1000L).map(_.toString).toSeq == base)
+    // release: the edge docs enter stage 1 and never leave it; every
+    // other figure is what the 40 real docs give on their own
+    def stages(dir: String) =
+      SparkEntry.queries("pipeline_release_e2e")(spark, dir).collect()
+        .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2), r.getLong(3)))
+        .toMap
+    val got = stages(d)
+    val want = stages(plain)
+    assert(got("1_gopher") ==
+      want("1_gopher").copy(_1 = want("1_gopher")._1 + 2L))
+    assert((got - "1_gopher") == (want - "1_gopher"))
+  }
+
   test("pipeline_neardup_full on EMPTY and single-doc corpora") {
     val dEmpty = corpusDir("nd_empty")(_.where(lit(false)))
     assert(SparkEntry.queries("pipeline_neardup_full")(spark, dEmpty)

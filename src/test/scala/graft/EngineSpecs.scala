@@ -410,7 +410,7 @@ class BucketedJoinSpec extends AnyFunSuite {
     val (liT, _) = ops.Scale.ensureBucketedTables(spark, sf)
     val q = ops.Scale.bucketedAggPlan(spark.table(liT))
     q.collect()
-    val shuffles = graft.tools.MetricsProbe.allNodes(q.queryExecution.executedPlan)
+    val shuffles = PlanProbe.allNodes(q.queryExecution.executedPlan)
       .count(_.getClass.getSimpleName.contains("ShuffleExchange"))
     // only the tiny n_lines histogram (+ its ordering) may shuffle — the
     // order-grain rollup must run on the bucket layout exchange-free
@@ -419,7 +419,7 @@ class BucketedJoinSpec extends AnyFunSuite {
       graft.util.Canon.tbl(spark, sf, "lineitem")
         .select("l_orderkey", "l_extendedprice", "l_discount"))
     plain.collect()
-    val plainShuffles = graft.tools.MetricsProbe.allNodes(plain.queryExecution.executedPlan)
+    val plainShuffles = PlanProbe.allNodes(plain.queryExecution.executedPlan)
       .count(_.getClass.getSimpleName.contains("ShuffleExchange"))
     assert(plainShuffles > shuffles,
       s"plain-table form should shuffle more ($plainShuffles vs $shuffles)")
@@ -436,7 +436,7 @@ class BucketedJoinSpec extends AnyFunSuite {
     try {
       val q = spark.table(liT).where(col("l_orderkey") === anyKey)
       q.collect()
-      val scan = graft.tools.MetricsProbe.allNodes(q.queryExecution.executedPlan)
+      val scan = PlanProbe.allNodes(q.queryExecution.executedPlan)
         .map(_.toString()).find(_.contains("SelectedBucketsCount")).get
       assert(scan.contains("SelectedBucketsCount: 1 out of 8"),
         s"bucket pruning missing from scan:\n$scan")
@@ -463,7 +463,7 @@ class PartitionPruneSpec extends AnyFunSuite {
     q.collect()
     // descend through AQE QueryStageExec wrappers — plain collectLeaves
     // never sees materialized-stage scans
-    val scan = graft.tools.MetricsProbe.allNodes(q.queryExecution.executedPlan)
+    val scan = PlanProbe.allNodes(q.queryExecution.executedPlan)
       .collectFirst {
         case f: org.apache.spark.sql.execution.FileSourceScanExec
           if f.relation.location.rootPaths.mkString.contains("events_by_date") => f
@@ -1488,7 +1488,7 @@ class CboSpec extends AnyFunSuite {
 
   test("stats + CBO reorder the q9-class star join; results unchanged") {
     val (off, on, rowsEqual, orderChanged) =
-      graft.tools.CboProbe.runScenario(spark, sf)
+      PlanProbe.cboScenario(spark, sf)
     assert(rowsEqual, "CBO reorder changed the query result")
     assert(orderChanged, s"no reorder: off=$off on=$on")
     // syntactic order starts at orders ⋈ lineitem (the biggest join);
@@ -1745,7 +1745,7 @@ class DppSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions._
     val q = SparkEntry.queries("join_dpp_date")(spark, sf)
     q.collect()
-    val scan = graft.tools.MetricsProbe.allNodes(q.queryExecution.executedPlan)
+    val scan = PlanProbe.allNodes(q.queryExecution.executedPlan)
       .collectFirst {
         case f: org.apache.spark.sql.execution.FileSourceScanExec
           if f.relation.location.rootPaths.mkString.contains("li_by_month") => f
@@ -1784,5 +1784,51 @@ class InvertedIndexSpec extends AnyFunSuite {
       "postings cap broken")
     assert(rows.forall(r => r.getString(2).split(",").length <= r.getLong(1)),
       "postings longer than df")
+  }
+}
+
+/** TextDedup.overlapped (the driver-side overlap behind the dedup/sim
+  * audits): a member that fails must not leave a sibling's Spark job or
+  * any pool thread running after the call returns. */
+class OverlapSpec extends AnyFunSuite {
+  import TestSession._
+  import scala.concurrent.Future
+  import scala.jdk.CollectionConverters._
+
+  private def waitUntil(what: String)(cond: => Boolean): Unit = {
+    val deadline = System.nanoTime() + 30000000000L
+    while (!cond && System.nanoTime() < deadline) Thread.sleep(20)
+    assert(cond, what)
+  }
+
+  test("a failing member rethrows, cancels its sibling's job, leaves no thread") {
+    val sc = spark.sparkContext
+    val err = intercept[IllegalStateException] {
+      TextDedup.overlapped(spark, 2) { implicit ec =>
+        val slow = Future {
+          // one task that runs until it is killed (or 120 s pass)
+          sc.parallelize(Seq(1L), 1).map { x =>
+            val ctx = org.apache.spark.TaskContext.get()
+            val t0 = System.nanoTime()
+            while (!ctx.isInterrupted() &&
+                System.nanoTime() - t0 < 120000000000L) Thread.sleep(20)
+            x
+          }.count()
+        }
+        val failing = Future {
+          waitUntil("slow job never started")(
+            sc.statusTracker.getActiveJobIds.nonEmpty)
+          throw new IllegalStateException("member failed")
+        }
+        TextDedup.awaitAll[Any](slow, failing)
+      }
+    }
+    assert(err.getMessage == "member failed")
+    // the status tracker is fed by the listener bus, so give it a moment
+    waitUntil("sibling job still active after the call returned")(
+      sc.statusTracker.getActiveJobIds.isEmpty)
+    val alive = Thread.getAllStackTraces.keySet.asScala
+      .filter(t => t.isAlive && t.getName.startsWith("graft-overlap-"))
+    assert(alive.isEmpty, s"pool threads alive: ${alive.map(_.getName)}")
   }
 }
